@@ -208,14 +208,6 @@ class EcommercePipeline(spark: SparkSession, warehouse: String) {
     }
   }
 
-  /** CSV ingest (S1): header + inferSchema, then the declared-schema
-    * cast loop (two-phase, reference glue_etl.py:591-593 + :296-312). */
-  def readCsv(path: String, schema: StructType): DataFrame =
-    Casting.castTo(
-      spark.read.option("header", "true").option("inferSchema", "true")
-        .csv(path),
-      schema)
-
   /** Bronze→silver cast: declared-schema cast loop over the bronze rows;
     * the lineage columns (undeclared) pass through, matching the
     * reference silver schemas which carry source_file +

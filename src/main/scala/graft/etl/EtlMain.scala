@@ -107,7 +107,7 @@ object EtlMain {
       val hist = graft.tables.LakehouseTable(
         spark, s"$warehouse/silver_products_history", Seq("product_id"))
       val attrs = Seq("department_id", "department", "product_name")
-      val updates = spark.read.parquet(s"$warehouse/silver_products")
+      val updates = pipe.silverProducts.read
         .select(("product_id" +: attrs).map(col): _*)
       val current =
         if (hist.exists) hist.read
@@ -120,11 +120,13 @@ object EtlMain {
       println(f"[etl] silver_products_history      rows=${hist.read.count()}%7d")
     }
 
-    // smoke stage: LIMIT-5 liveness per output table
-    Seq("silver_products", "silver_orders", "silver_order_items")
+    // smoke stage: LIMIT-5 liveness per output table (through the
+    // table's own read: a compacted unpartitioned table keeps its data
+    // in a compacted-* subdir, which a plain parquet read cannot see)
+    Seq(pipe.silverProducts, pipe.silverOrders, pipe.silverOrderItems)
       .foreach { t =>
-        val n = spark.read.parquet(s"$warehouse/$t").limit(5).count()
-        require(n > 0, s"smoke check failed for $t")
+        val n = t.read.limit(5).count()
+        require(n > 0, s"smoke check failed for ${t.path}")
       }
     println("[etl] smoke checks passed")
 

@@ -119,6 +119,24 @@ object MaterializedAgg {
     case _ => None
   }
 
+  /** Read the parquet root `p` the way [[graft.tables.LakehouseTable
+    * .read]] reads a table: partition discovery when the root holds
+    * `col=value` dirs, recursive file lookup for any other dir. An
+    * unpartitioned table's data can sit entirely in subdirs —
+    * appendBatch `batch-*` dirs, a fold's `compacted-*` dir — where a
+    * plain read finds nothing to infer a schema from
+    * (UNABLE_TO_INFER_SCHEMA). Either read keys the same root paths
+    * ([[rootsOf]]), so registrations still match every reader. */
+  private def readRoot(spark: SparkSession, p: String): DataFrame = {
+    val root = new org.apache.hadoop.fs.Path(p)
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    val flatDir = fs.getFileStatus(root).isDirectory &&
+      !fs.listStatus(root).exists(st =>
+        st.isDirectory && st.getPath.getName.contains("="))
+    val r = spark.read
+    (if (flatDir) r.option("recursiveFileLookup", "true") else r).parquet(p)
+  }
+
   /** Build the conventional summary frame for `groupCols`/`measures`:
     * one row per group with cnt, sum_m, min_m, max_m, cnt_m. Write it
     * wherever the gold layer lives, then [[register]] it. */
@@ -171,7 +189,7 @@ object MaterializedAgg {
                    groupCols: Seq[String], measures: Seq[String]): Unit = {
     require(dims.nonEmpty, "registerStar needs at least one dim")
     def scanOf(p: String): (Set[String], Set[String]) = {
-      val plan = spark.read.parquet(p).queryExecution.analyzed
+      val plan = readRoot(spark, p).queryExecution.analyzed
       val r = rootsOf(plan).getOrElse(throw new IllegalArgumentException(
         s"$p must be a parquet scan"))
       (r, plan.output.map(_.name.toLowerCase).toSet)
@@ -206,7 +224,7 @@ object MaterializedAgg {
         s"summary column '$n' must resolve to exactly one star input; " +
         s"found it in $hits of ${inputCols.size} — rebuild and re-register")
     }
-    spark.read.parquet(summaryPath).queryExecution.analyzed match {
+    readRoot(spark, summaryPath).queryExecution.analyzed match {
       case lr: LogicalRelation =>
         val have = lr.output.map(_.name.toLowerCase).toSet
         // groupCols too, not just the aggregate columns: a summary
@@ -242,8 +260,8 @@ object MaterializedAgg {
     * `sourcePath.groupBy(groupCols).agg(...)` over `measures`. */
   def register(spark: SparkSession, sourcePath: String, summaryPath: String,
                groupCols: Seq[String], measures: Seq[String]): Unit = {
-    val srcPlan = spark.read.parquet(sourcePath).queryExecution.analyzed
-    val sumPlan = spark.read.parquet(summaryPath).queryExecution.analyzed
+    val srcPlan = readRoot(spark, sourcePath).queryExecution.analyzed
+    val sumPlan = readRoot(spark, summaryPath).queryExecution.analyzed
     (rootsOf(srcPlan), sumPlan) match {
       case (Some(roots), lr: LogicalRelation) =>
         val have = lr.output.map(_.name.toLowerCase).toSet
@@ -271,7 +289,7 @@ object MaterializedAgg {
   }
 
   def deregister(spark: SparkSession, sourcePath: String): Unit =
-    rootsOf(spark.read.parquet(sourcePath).queryExecution.analyzed)
+    rootsOf(readRoot(spark, sourcePath).queryExecution.analyzed)
       .foreach(registry.remove)
 
   /** Drop only the registration of ONE logical shape (grain +
@@ -289,7 +307,7 @@ object MaterializedAgg {
                               measures: Seq[String]): Unit = {
     val g = groupCols.map(_.toLowerCase).toSet
     val m = measures.map(_.toLowerCase).toSet
-    rootsOf(spark.read.parquet(sourcePath).queryExecution.analyzed)
+    rootsOf(readRoot(spark, sourcePath).queryExecution.analyzed)
       .foreach { roots =>
         registry.compute(roots, (_, v) =>
           if (v == null) null
@@ -509,14 +527,14 @@ object MaterializedAgg {
     // The rebuilt plan's aggregate sits over a Join, which the PLAIN
     // rewrite's unwrap bails on, so plain registrations of the fact
     // path cannot capture it and may stay.
-    val dimPlan = fact.spark.read.parquet(dimPath).queryExecution.analyzed
+    val dim = readRoot(fact.spark, dimPath)
+    val dimPlan = dim.queryExecution.analyzed
     val dimRoots = rootsOf(dimPlan).getOrElse(
       throw new IllegalArgumentException(s"$dimPath must be a parquet scan"))
     rootsOf(factRead.queryExecution.analyzed).foreach { factRoots =>
       deregisterJoinShape(Set(factRoots, dimRoots), groupCols, measures,
         Seq(DimSpec(dimRoots, factKey.toLowerCase, dimKey.toLowerCase)))
     }
-    val dim = fact.spark.read.parquet(dimPath)
     val slice = factRead.filter(col(groupCols.head).isInCollection(changed))
     val rebuilt = buildStar(slice, Seq((dim, factKey, dimKey)),
                             groupCols, measures)

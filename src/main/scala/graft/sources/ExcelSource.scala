@@ -836,21 +836,6 @@ object ExcelSource {
     zip.finish()
   }
 
-  /** Collect-and-write a DataFrame to ONE workbook (small-export
-    * contract — see [[write]]; the format caps a sheet at 1,048,576
-    * rows so a single-file export is bounded by construction; use
-    * [[writeDir]] for anything larger). Dates/timestamps become
-    * styled serials, numerics native number cells, everything else
-    * inline strings. */
-  def writeFile(df: DataFrame, file: String): Unit = {
-    val header = df.columns.toSeq
-    val rows = df.collect().toSeq.map(_.toSeq)
-    val p = java.nio.file.Paths.get(file)
-    if (p.getParent != null) java.nio.file.Files.createDirectories(p.getParent)
-    val out = java.nio.file.Files.newOutputStream(p)
-    try write(header, rows, out) finally out.close()
-  }
-
   /** Distributed export: one `part-NNNNN.xlsx` per partition, written
     * EXECUTOR-side through the Hadoop FileSystem API (works for
     * file:// and any configured cluster FS), plus a `_SUCCESS` marker

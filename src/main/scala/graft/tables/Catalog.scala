@@ -105,9 +105,9 @@ object Catalog {
 
   /** All persisted entries, name-sorted.
     *
-    * Reads go through the table layer's CHECKSUM-FREE FileSystem
-    * (same reason as the epoch markers): a manifest replace lands the
-    * data file and its .crc sidecar as TWO operations on a
+    * Reads go through the table layer's CHECKSUM-FREE protocol
+    * FileSystem ([[LakehouseTable.protocolFs]]): a manifest replace
+    * lands the data file and its .crc sidecar as TWO operations on a
     * checksummed store, so two racing registers can leave writer A's
     * bytes permanently paired with writer B's .crc — a verifying
     * reader would then throw ChecksumException until the next
@@ -123,21 +123,21 @@ object Catalog {
     val fs = fsOf(spark, warehouseRoot)
     val d = dir(warehouseRoot)
     if (!fs.exists(d)) return Nil
-    val raw = LakehouseTable.rawFs(
+    val pfs = LakehouseTable.protocolFs(
       d.toUri, spark.sparkContext.hadoopConfiguration)
     fs.listStatus(d).toSeq.map(_.getPath)
       .filter(_.getName.endsWith(".json"))
-      .flatMap(readEntry(raw, _))
+      .flatMap(readEntry(pfs, _))
       .sortBy(_.name)
   }
 
-  private def readEntry(raw: org.apache.hadoop.fs.FileSystem,
+  private def readEntry(pfs: org.apache.hadoop.fs.FileSystem,
                         p: Path): Option[Entry] = {
     var attempt = 0
     while (true) {
-      if (!raw.exists(p)) return None // unregistered or mid-replace
+      if (!pfs.exists(p)) return None // unregistered or mid-replace
       try {
-        val in = raw.open(p)
+        val in = pfs.open(p)
         val txt = try new String(in.readAllBytes(),
           java.nio.charset.StandardCharsets.UTF_8) finally in.close()
         return Some(fromJson(txt))
@@ -183,15 +183,14 @@ object Catalog {
     }
 
   /** The table's current mutation epoch, read through the table
-    * layer's torn-read-tolerant marker reader ("absent" for
-    * never-mutated paths) — a verifying read would throw
-    * ChecksumException whenever a concurrent stamper interleaved
-    * (see LakehouseTable.markerFs). */
+    * layer's torn-read-tolerant epoch reader ("absent" for
+    * never-mutated paths), which also absorbs a concurrent stamper's
+    * unlink-to-create gap. */
   private def currentEpoch(spark: SparkSession, path: String): String =
-    LakehouseTable.readMarker(
-      LakehouseTable.rawFs(new java.net.URI(path),
-                           spark.sparkContext.hadoopConfiguration),
-      path + ".schemaepoch")
+    LakehouseTable.readEpoch(
+      LakehouseTable.protocolFs(new java.net.URI(path),
+                                spark.sparkContext.hadoopConfiguration),
+      path)
 
   // minimal JSON codec — the entry shape is fixed and flat, and
   // json4s (on Spark's classpath) does the parsing; emission is a

@@ -46,11 +46,15 @@ import java.util.UUID
   *      (loud aborts) weakens to best-effort there while the
   *      physically-disjoint commuting writes stay safe.
   *
-  * Marker files (schema epoch) are advisory rewrite-in-place values
-  * read through a checksum-free FS with shape-validated bounded
-  * retry; they need only read-after-write of small objects, which
-  * every store above provides. Listing consistency (commit-log and
-  * tombstone scans) is assumed — true everywhere since S3's 2020
+  * Protocol files — the schema-epoch marker and the `i-`/`c-`/`rw-`
+  * commit records — are CREATE-ONCE: written by exclusive create
+  * through one checksum-free FS ([[protocolFs]]), never truncated and
+  * never renamed over. A record is never rewritten at all; a marker
+  * stamp unlinks the old marker and exclusively creates the new one
+  * (see [[stampEpochValue]]), and readers absorb the brief gap with a
+  * bounded retry. They need only read-after-write of small objects,
+  * which every store above provides. Listing consistency (commit-log
+  * and tombstone scans) is assumed — true everywhere since S3's 2020
   * strong-consistency change.
   */
 final case class LakehouseTable(spark: SparkSession, path: String,
@@ -117,13 +121,20 @@ final case class LakehouseTable(spark: SparkSession, path: String,
     // reading it is O(1) against the O(files) listing the cache saves.
     val epoch = schemaEpoch()
     val cached = cachedSchema
-    if (cached == null || cached._1 != epoch)
+    if (cached != null && cached._1 == epoch) cached._2
+    else {
       // retryVanishedRead: inference lists the live tree and then reads
       // footers — a concurrent fold's delete loop can remove a listed
       // file in between (the soak surfaced exactly this); re-running
       // re-lists, and the schema is identical either way
-      cachedSchema = (epoch, LakehouseTable.retryVanishedRead()(read.schema))
-    cachedSchema._2
+      val schema = LakehouseTable.retryVanishedRead()(read.schema)
+      // never cached under "absent": two separate absent windows (say
+      // a never-stamped table and, generations later, a stamper's
+      // crash gap) would compare equal, pairing a schema inferred in
+      // the first with the generation of the second (A→B→A)
+      if (epoch != "absent") cachedSchema = (epoch, schema)
+      schema
+    }
   }
 
   /** Schema-preserving empty frame — the zero-survivor result of a
@@ -183,12 +194,22 @@ final case class LakehouseTable(spark: SparkSession, path: String,
 
   /** The tombstone-swap protocol shared by full-table overwrite and
     * per-partition merges: rename live aside (rename, not delete),
-    * staged into place, then drop the tombstone. The no-live window
+    * staged into place, then retire the tombstone. The no-live window
     * collapses to the single rename gap, and a crash between the
     * renames leaves the old data in the tombstone — which
     * [[repairInterruptedSwaps]] rolls back automatically. ONE
     * implementation on purpose: the crash-recovery story depends on
-    * every swap following exactly this sequence and naming. */
+    * every swap following exactly this sequence and naming.
+    *
+    * Retiring is a rename out of the tombstone namespace
+    * (`<table>.retired-<rest>`, which no repair ever restores) and a
+    * background delete ([[LakehouseTable.reclaim]]) — Delta's
+    * logical-remove-then-VACUUM split. The replaced tree's files are
+    * dead the moment the second rename lands, but unlinking them is
+    * O(files) store round trips: the old tree of a 50k-file
+    * compaction took 1-3.5 min to delete on a local ext4 disk mounted
+    * with online discard, against ~10 s for the whole rewrite. A
+    * retired dir a crash leaves behind is [[vacuum]]'s to sweep. */
   private def swapIn(staged: Path, live: Path, tombstone: Path,
                      ticket: MutationTicket, op: String): Unit = {
     resolveConflictsOrAbort(ticket, op)
@@ -196,7 +217,12 @@ final case class LakehouseTable(spark: SparkSession, path: String,
     val hadLive = fs.exists(live)
     if (hadLive) renameOrFail(live, tombstone)
     renameOrFail(staged, live)
-    if (hadLive) { step(s"delete:${tombstone.getName}"); fs.delete(tombstone, true) }
+    if (hadLive) {
+      val retired = new Path(tombstone.getParent,
+        tombstone.getName.replace(".tombstone-", ".retired-"))
+      renameOrFail(tombstone, retired)
+      LakehouseTable.reclaim(fs, retired)
+    }
   }
 
   // ── optimistic concurrency (Delta-style commit conflict detection) ─
@@ -304,8 +330,8 @@ final case class LakehouseTable(spark: SparkSession, path: String,
 
   private def listCommitNames(): Set[String] = {
     val p = new Path(commitLogPath)
-    if (!fs.exists(p)) Set.empty
-    else fs.listStatus(p).iterator.map(_.getPath.getName)
+    if (!protocolFs.exists(p)) Set.empty
+    else protocolFs.listStatus(p).iterator.map(_.getPath.getName)
       .filter(n => n.startsWith("c-") || n.startsWith("i-")).toSet
   }
 
@@ -333,9 +359,9 @@ final case class LakehouseTable(spark: SparkSession, path: String,
     LakehouseTable.retryTornRead() {
       // commit records are create-once (never rewritten), so the only
       // race is a reader slipping between a concurrent writer's
-      // create and close: verification-free read + shape check +
-      // bounded wait covers it (same discipline as the epoch marker)
-      val in = markerFs.open(new Path(commitLogPath, name))
+      // create and close: shape check + bounded wait covers it (same
+      // discipline as the epoch marker)
+      val in = protocolFs.open(new Path(commitLogPath, name))
       val txt = try new String(in.readAllBytes(),
         java.nio.charset.StandardCharsets.UTF_8) finally in.close()
       val i = txt.indexOf('|')
@@ -349,10 +375,15 @@ final case class LakehouseTable(spark: SparkSession, path: String,
   /** Write one record file (create-once, never rewritten). */
   private def writeRecord(name: String, op: String,
                           parts: Set[String]): Unit = {
-    fs.mkdirs(new Path(commitLogPath))
-    val body = op + "|" +
-      parts.map(java.net.URLEncoder.encode(_, "UTF-8")).mkString(",")
-    val out = fs.create(new Path(commitLogPath, name), false)
+    protocolFs.mkdirs(new Path(commitLogPath))
+    createProtocolFile(new Path(commitLogPath, name), op + "|" +
+      parts.map(java.net.URLEncoder.encode(_, "UTF-8")).mkString(","))
+  }
+
+  /** Exclusive create of one protocol file holding `body`; throws
+    * FileAlreadyExistsException when the path exists. */
+  private def createProtocolFile(p: Path, body: String): Unit = {
+    val out = protocolFs.create(p, false)
     try out.write(body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
   }
@@ -379,7 +410,7 @@ final case class LakehouseTable(spark: SparkSession, path: String,
   private def writeCommitRecord(t: MutationTicket): Unit =
     if (!t.recorded) {
       step(s"commit:${t.op}")
-      if (!fs.exists(new Path(commitLogPath, "i-" + t.token)))
+      if (!protocolFs.exists(new Path(commitLogPath, "i-" + t.token)))
         abortConflict(t, t.op,
           s"this mutation's begin-to-publish window outlived " +
           s"commitTtlMs (${LakehouseTable.commitTtlMs} ms) and its " +
@@ -533,12 +564,12 @@ final case class LakehouseTable(spark: SparkSession, path: String,
     // [[repairFoldRewrites]] below — TTL-pruning one mid-crash would
     // strand duplicate input files forever.
     val cl = new Path(commitLogPath)
-    if (fs.exists(cl)) {
+    if (protocolFs.exists(cl)) {
       val cutoff = System.currentTimeMillis() - LakehouseTable.commitTtlMs
-      fs.listStatus(cl).iterator
+      protocolFs.listStatus(cl).iterator
         .filter(s => !s.getPath.getName.startsWith("rw-"))
         .filter(_.getModificationTime < cutoff)
-        .foreach(s => fs.delete(s.getPath, false))
+        .foreach(s => protocolFs.delete(s.getPath, false))
     }
     val foldActions = repairFoldRewrites()
     val prefix = live.getName + ".tombstone-"
@@ -596,8 +627,8 @@ final case class LakehouseTable(spark: SparkSession, path: String,
     * All paths are idempotent under a crash mid-repair. */
   private def repairFoldRewrites(): Seq[String] = {
     val cl = new Path(commitLogPath)
-    if (!fs.exists(cl)) return Nil
-    fs.listStatus(cl).toSeq.filter(_.getPath.getName.startsWith("rw-"))
+    if (!protocolFs.exists(cl)) return Nil
+    protocolFs.listStatus(cl).toSeq.filter(_.getPath.getName.startsWith("rw-"))
       .flatMap { st =>
         val tag = st.getPath.getName.drop(3)
         // the owning fold deletes its record on completion — a record
@@ -625,7 +656,7 @@ final case class LakehouseTable(spark: SparkSession, path: String,
             fs.delete(new Path(path, n), true)
           }
           step(s"delete:rw-$tag")
-          fs.delete(st.getPath, false)
+          protocolFs.delete(st.getPath, false)
           // a completed delete changes the visible file set relative
           // to anything derived mid-crash — same invalidation rule
           // as a tombstone restore
@@ -633,7 +664,7 @@ final case class LakehouseTable(spark: SparkSession, path: String,
         } else if (st.getModificationTime <
                    System.currentTimeMillis() - LakehouseTable.commitTtlMs) {
           step(s"delete:rw-$tag")
-          fs.delete(st.getPath, false)
+          protocolFs.delete(st.getPath, false)
           Seq(s"rolledBackFold:$tag")
         } else Nil // young land-less record: a live fold owns it
       }
@@ -1302,7 +1333,7 @@ final case class LakehouseTable(spark: SparkSession, path: String,
       }
     }
     step(s"delete:rw-$tag")
-    fs.delete(new Path(commitLogPath, s"rw-$tag"), false)
+    protocolFs.delete(new Path(commitLogPath, s"rw-$tag"), false)
     publishSchemaEpoch(t)
   }
 
@@ -1399,7 +1430,10 @@ final case class LakehouseTable(spark: SparkSession, path: String,
     * superseded, dropped — never age-gated, because an unrepaired
     * tombstone may hold the only copy of a partition), then delete
     * staging dirs older than `maxAgeMs` — a LIVE writer's in-flight
-    * staging dir is younger than any sane retention window. The live
+    * staging dir is younger than any sane retention window — and the
+    * retired trees of completed swaps that no background delete of
+    * this process still owns (a crash or exit cut it short; nothing
+    * ever reads a retired tree, so it is not age-gated). The live
     * dir and the `.versions` archive are never touched. Returns the
     * actions taken. */
   def vacuum(maxAgeMs: Long = 24L * 3600 * 1000): Seq[String] = {
@@ -1411,12 +1445,19 @@ final case class LakehouseTable(spark: SparkSession, path: String,
     val prefixes = Seq(".staged-", ".appendstage-", ".filestats.staged-",
                        ".bloomstats.staged-")
       .map(live.getName + _)
+    val retired = live.getName + ".retired-"
     repaired ++ fs.listStatus(parent).toSeq
-      .filter(s => prefixes.exists(s.getPath.getName.startsWith))
-      .filter(_.getModificationTime < cutoff)
-      .map { s =>
+      .filter { s =>
+        val n = s.getPath.getName
+        if (n.startsWith(retired)) !LakehouseTable.reclaiming(fs, s.getPath)
+        else prefixes.exists(n.startsWith) && s.getModificationTime < cutoff
+      }
+      .flatMap { s =>
         step(s"delete:${s.getPath.getName}")
-        fs.delete(s.getPath, true); s"deleted:${s.getPath.getName}"
+        // false = already gone: a background delete finished between
+        // the listing and here
+        if (fs.delete(s.getPath, true)) Some(s"deleted:${s.getPath.getName}")
+        else None
       }
   }
 
@@ -1433,33 +1474,57 @@ final case class LakehouseTable(spark: SparkSession, path: String,
 
   /** Current schema epoch: the marker's content, written fresh by
     * every mutation ([[invalidateFileStats]]). "absent" (pre-marker
-    * tables, or a table never mutated through this API) behaves like
-    * any other single value — the first mutation stamps a real one. */
-  private def schemaEpoch(): String =
-    LakehouseTable.readMarker(markerFs, schemaEpochPath)
+    * tables, a table never mutated through this API, or a stamper that
+    * crashed between its unlink and its create) is never a cache key
+    * ([[liveSchema]]) — the next mutation stamps a real one. */
+  private[graft] def schemaEpoch(): String =
+    LakehouseTable.readEpoch(protocolFs, path)
 
-  /** Marker reads go through a CHECKSUM-VERIFICATION-FREE FileSystem
-    * instance. The epoch marker is rewritten by concurrent stampers
-    * with create(overwrite), and on a checksummed filesystem (the
-    * Hadoop local FS) each rewrite lands the data file and its .crc
-    * sidecar as TWO operations — two interleaved stampers can leave
-    * writer A's bytes PERMANENTLY paired with writer B's .crc, and
-    * every verifying reader then throws ChecksumException until the
-    * next stamp (surfaced by the truly-parallel append spec: four
-    * concurrent writers all crashed on each other's stamps; retrying
-    * the verified read cannot help because the mismatch is at rest,
-    * not in flight). The markers are ~40-byte advisory values whose
-    * content is validated by shape and retried when torn
-    * ([[LakehouseTable.readMarker]]), and the next stamp rewrites
-    * both files — skipping crc verification for THESE reads loses
-    * nothing. Data files never go through this instance. */
-  private def markerFs = LakehouseTable.rawFs(
+  /** The FileSystem every protocol file (epoch marker, commit
+    * records) is written and read through: checksum-free, so no `.crc`
+    * sidecar exists to go out of sync with its data file (on the
+    * Hadoop local FS a sidecar is a second file, written and replaced
+    * as a separate operation). Protocol files are CREATE-ONCE — never
+    * truncated, never renamed over: a record is written once, and a
+    * marker stamp is an unlink plus an exclusive create
+    * ([[stampEpochValue]]). That is also what keeps a stamp cheap: on
+    * ext4 (default `auto_da_alloc`) truncating a file in place, or
+    * renaming over it, forces the replaced file's pending writeback
+    * and the stamper blocks on it (on a local ext4 disk, 41–151 ms a
+    * stamp against 4–5 ms for unlink + create). Content is validated
+    * by shape and torn reads retry ([[LakehouseTable.readEpoch]]).
+    * Data files never go through this instance. */
+  private def protocolFs = LakehouseTable.protocolFs(
     new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
 
+  /** Stamp the epoch marker with `v`: unlink, then exclusive create.
+    * The last stamper still wins, as with an in-place rewrite: a
+    * create that finds the marker present lost to a concurrent stamper
+    * that landed inside this one's gap, and stamping again makes this
+    * stamper the later one. Readers that hit the gap see no marker
+    * beside an existing commit log and retry ([[LakehouseTable
+    * .readEpoch]]) — a table's first mutation writes its intent record
+    * before its first stamp, and the log dir is never removed, so the
+    * log exists whenever a marker ever did. */
   private def stampEpochValue(v: String): Unit = {
-    val out = fs.create(new Path(schemaEpochPath), true)
-    try out.write(v.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
+    val p = new Path(schemaEpochPath)
+    var failures = 0
+    var landed = false
+    while (!landed) {
+      protocolFs.delete(p, false)
+      try { createProtocolFile(p, v); landed = true }
+      catch {
+        case _: org.apache.hadoop.fs.FileAlreadyExistsException =>
+        // a concurrent stamper can also unlink this stamper's file
+        // mid-create: the local FS sets a new file's permissions in a
+        // second call, which then finds no file. Stamping again makes
+        // this stamper the later one, as above; the bound lets a
+        // persistent error (an unwritable dir) surface
+        case e: java.io.IOException =>
+          failures += 1
+          if (failures >= 10) throw e
+      }
+    }
   }
 
   /** Stats are DERIVED data: every mutating entry point deletes them
@@ -1865,6 +1930,47 @@ object LakehouseTable {
     * a single volatile read per step. */
   @volatile private[graft] var globalFaultHook: (String, String) => Unit = null
 
+  /** Background deletion of retired swap trees ([[swapIn]]). One
+    * thread: unlinks in parallel barely help on the disk of the
+    * [[swapIn]] note (50k files: 132 s 16-way, 167 s serial), and one
+    * thread leaves the rest of the store to the mutations. It exits
+    * when idle.
+    * Not a daemon, so a driver whose main returns normally finishes
+    * its pending deletes before the JVM exits (System.exit does not
+    * wait; [[vacuum]] sweeps what that leaves). */
+  private val reclaimer = {
+    val ex = new java.util.concurrent.ThreadPoolExecutor(1, 1, 5L,
+      java.util.concurrent.TimeUnit.SECONDS,
+      new java.util.concurrent.LinkedBlockingQueue[Runnable](),
+      (r: Runnable) => new Thread(r, "graft-reclaim"))
+    ex.allowCoreThreadTimeOut(true)
+    ex
+  }
+
+  /** Qualified paths of retired trees whose background delete has
+    * not finished; [[vacuum]] leaves these to their owner. */
+  private val pendingReclaims =
+    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+
+  /** Delete the retired tree `p` in the background. A failed delete
+    * leaves the tree for [[vacuum]]: nothing reads a retired tree, so
+    * a leftover costs only space. */
+  private[tables] def reclaim(fs: org.apache.hadoop.fs.FileSystem,
+                              p: Path): Unit = {
+    val key = fs.makeQualified(p).toString
+    pendingReclaims.add(key)
+    reclaimer.execute { () =>
+      try fs.delete(p, true)
+      catch { case scala.util.control.NonFatal(_) => false }
+      finally pendingReclaims.remove(key)
+      ()
+    }
+  }
+
+  private[tables] def reclaiming(fs: org.apache.hadoop.fs.FileSystem,
+                                 p: Path): Boolean =
+    pendingReclaims.contains(fs.makeQualified(p).toString)
+
   /** Optimistic-concurrency knobs (process-wide; tests shrink them).
     * `conflictRetries × conflictRetrySleepMs` bounds how long a
     * publisher waits on an epoch marker with NO record at all (a
@@ -1932,45 +2038,59 @@ object LakehouseTable {
     throw new IllegalStateException("unreachable")
   }
 
-  /** Process-wide cache of checksum-verification-free FileSystem
-    * instances for marker reads (see the instance-side `markerFs`
-    * doc for why verification must be off there). `newInstance`
-    * bypasses Hadoop's FS cache so the flag cannot leak into data
-    * reads; one instance per scheme+authority, never closed (they
+  /** Process-wide cache of the checksum-free protocol-file
+    * FileSystem instances (see the instance-side `protocolFs` doc for
+    * why checksums must be off there). `newInstance` bypasses
+    * Hadoop's FS cache so the flags cannot leak into data reads and
+    * writes; one instance per scheme+authority, never closed (they
     * live as long as the process, like Hadoop's own cache). */
-  private val rawFsCache =
+  private val protocolFsCache =
     new java.util.concurrent.ConcurrentHashMap[String,
       org.apache.hadoop.fs.FileSystem]()
 
-  private[tables] def rawFs(uri: java.net.URI,
-                            conf: org.apache.hadoop.conf.Configuration)
+  private[tables] def protocolFs(uri: java.net.URI,
+                                 conf: org.apache.hadoop.conf.Configuration)
       : org.apache.hadoop.fs.FileSystem =
-    rawFsCache.computeIfAbsent(
+    protocolFsCache.computeIfAbsent(
       uri.getScheme + "://" + Option(uri.getAuthority).getOrElse(""),
       _ => {
         val f = org.apache.hadoop.fs.FileSystem.newInstance(uri, conf)
         f.setVerifyChecksum(false)
+        f.setWriteChecksum(false)
         f
       })
 
-  /** Read a tiny marker file's content through `mfs` (a [[rawFs]]
-    * instance), tolerating the create-to-close torn window of a
-    * concurrent stamper: empty content is a writer mid-flight, not a
-    * value — bounded wait, then loud. Absent marker = "absent". */
-  private[tables] def readMarker(
-      mfs: org.apache.hadoop.fs.FileSystem, markerPath: String): String =
-    retryTornRead() {
-      val p = new org.apache.hadoop.fs.Path(markerPath)
-      if (!mfs.exists(p)) "absent"
-      else {
-        val in = mfs.open(p)
-        val txt = try new String(in.readAllBytes(),
-          java.nio.charset.StandardCharsets.UTF_8) finally in.close()
-        if (txt.isEmpty) throw new java.io.IOException(
-          s"torn marker $markerPath: empty")
-        txt
-      }
-    }
+  /** A missing marker beside an existing commit log: a stamper's
+    * unlink-to-create gap, retried like a torn read. */
+  private final class MarkerGap(p: String)
+      extends java.io.IOException(s"marker $p absent mid-stamp")
+
+  /** The schema epoch of the table at `tablePath`: its
+    * `.schemaepoch` marker's content, read through `pfs` (a
+    * [[protocolFs]] instance). Two stamper windows retry as torn
+    * reads (bounded): create-to-close (empty content) and
+    * unlink-to-create (no marker although the table's `.commits` log
+    * exists). A marker still missing after the retries — a table never
+    * stamped, or a stamper that crashed inside its gap — reads as
+    * "absent". */
+  private[tables] def readEpoch(pfs: org.apache.hadoop.fs.FileSystem,
+                                tablePath: String): String =
+    try retryTornRead() {
+      val p = new org.apache.hadoop.fs.Path(tablePath + ".schemaepoch")
+      val txt =
+        try {
+          val in = pfs.open(p)
+          try new String(in.readAllBytes(),
+            java.nio.charset.StandardCharsets.UTF_8) finally in.close()
+        } catch { case _: java.io.FileNotFoundException => null }
+      if (txt == null) {
+        if (pfs.exists(new org.apache.hadoop.fs.Path(tablePath + ".commits")))
+          throw new MarkerGap(p.toString)
+        "absent"
+      } else if (txt.isEmpty)
+        throw new java.io.IOException(s"torn marker $p: empty")
+      else txt
+    } catch { case _: MarkerGap => "absent" }
 
   /** Bounded retry for marker reads racing a concurrent writer's
     * create/close window. Persistent IOExceptions (a genuinely

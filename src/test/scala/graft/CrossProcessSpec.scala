@@ -19,43 +19,23 @@ import org.scalatest.funsuite.AnyFunSuite
   *   3. appendBatch ∥ completed overwrite → the append aborts loudly,
   *      the overwrite's generation is intact, the rerun applies
   *
-  * Leg 1 also soak-tests the torn-marker reader cross-process: both
-  * writers rewrite the epoch marker (create-overwrite, data + .crc as
-  * two operations on the local FS) while both read it through the
-  * checksum-free marker FS.
+  * Leg 1 also soak-tests the epoch reader cross-process: both writers
+  * stamp the epoch marker (unlink, then exclusive create, through the
+  * checksum-free protocol FS — the marker is never rewritten in place)
+  * while both read it, retrying across each other's unlink-to-create
+  * gaps and create-to-close torn windows.
   */
 class CrossProcessSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  /** The forked child needs the same JDK17 module opens Spark always
-    * needs outside spark-submit (mirrors build.sbt / Spark's own
-    * JavaModuleOptions.defaultModuleOptions). */
-  private val addOpens = Seq(
-    "java.base/java.lang", "java.base/java.lang.invoke",
-    "java.base/java.lang.reflect", "java.base/java.io",
-    "java.base/java.net", "java.base/java.nio",
-    "java.base/java.util", "java.base/java.util.concurrent",
-    "java.base/java.util.concurrent.atomic",
-    "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-    "java.base/sun.security.action", "java.base/sun.util.calendar",
-  ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
-
-  private def javaBin = new java.io.File(
-    new java.io.File(System.getProperty("java.home"), "bin"), "java")
-
   /** Spawn the CrossProcessWriter child and return (process, syncDir).
     * The child signals session-up via `<syncDir>/ready`. */
   private def spawn(mode: String, args: String*): (Process, java.io.File) = {
     val syncDir = new java.io.File(TestSpark.tmpDir("xproc-sync"))
-    val cmd = Seq(javaBin.getAbsolutePath, "-Xmx3g") ++ addOpens ++ Seq(
-      "-Dspark.ui.enabled=false",
-      "-cp", System.getProperty("java.class.path"),
-      "graft.tables.CrossProcessWriter", mode) ++ args :+ syncDir.getAbsolutePath
-    val pb = new ProcessBuilder(cmd: _*)
-    pb.redirectErrorStream(true)
-    pb.redirectOutput(java.io.File.createTempFile("xproc-child", ".log"))
-    val p = pb.start()
+    val p = ForkedJvm.start("graft.tables.CrossProcessWriter",
+      (mode +: args) :+ syncDir.getAbsolutePath, "3g",
+      java.io.File.createTempFile("xproc-child", ".log"))
     val deadline = System.currentTimeMillis() + 120000
     while (!new java.io.File(syncDir, "ready").exists()) {
       if (!p.isAlive) fail(s"child died before ready (exit ${p.exitValue()})")
@@ -75,10 +55,8 @@ class CrossProcessSpec extends AnyFunSuite {
     p.exitValue()
   }
 
-  private def canFork: Boolean = javaBin.canExecute
-
   test("cross-process: concurrent appendBatch writers in two JVMs all land") {
-    assume(canFork, "no forkable java binary")
+    assume(ForkedJvm.canFork, "no forkable java binary")
     val dir = TestSpark.tmpDir("xproc-append")
     val t = LakehouseTable(spark, s"$dir/t", Seq("k"))
     t.appendBatch(Seq((0, "base")).toDF("k", "v"))
@@ -100,7 +78,7 @@ class CrossProcessSpec extends AnyFunSuite {
   }
 
   test("cross-process: disjoint-partition upserts in two JVMs both land") {
-    assume(canFork, "no forkable java binary")
+    assume(ForkedJvm.canFork, "no forkable java binary")
     val dir = TestSpark.tmpDir("xproc-upsert")
     val t = LakehouseTable(spark, s"$dir/t", Seq("k"), Seq("part"))
     t.overwrite(Seq((1, "a", "p1"), (2, "b", "p2")).toDF("k", "v", "part"))
@@ -127,7 +105,7 @@ class CrossProcessSpec extends AnyFunSuite {
 
   test("cross-process: a fold compaction in another JVM runs BESIDE " +
        "this writer's appends — all rows land exactly once") {
-    assume(canFork, "no forkable java binary")
+    assume(ForkedJvm.canFork, "no forkable java binary")
     val dir = TestSpark.tmpDir("xproc-compact")
     val t = LakehouseTable(spark, s"$dir/t", Seq("k"))
     val base = (1 to 20).map(i => (i, s"frag-$i"))
@@ -159,7 +137,7 @@ class CrossProcessSpec extends AnyFunSuite {
 
   test("cross-process: an overwrite from another JVM aborts this " +
        "writer's append loudly; the overwrite generation is intact") {
-    assume(canFork, "no forkable java binary")
+    assume(ForkedJvm.canFork, "no forkable java binary")
     val dir = TestSpark.tmpDir("xproc-conflict")
     val t = LakehouseTable(spark, s"$dir/t", Seq("k"))
     t.appendBatch(Seq((0, "base")).toDF("k", "v"))
@@ -190,7 +168,7 @@ class CrossProcessSpec extends AnyFunSuite {
 
   test("cross-process: an ackBatch from another JVM racing this " +
        "writer's fold is never silent — early ack aborts the fold") {
-    assume(canFork, "no forkable java binary")
+    assume(ForkedJvm.canFork, "no forkable java binary")
     val dir = TestSpark.tmpDir("xproc-ackfold-e")
     val t = LakehouseTable(spark, s"$dir/t", Seq("k"))
     val b1 = t.appendBatch(Seq((1, "a"), (2, "b")).toDF("k", "v"))
@@ -222,7 +200,7 @@ class CrossProcessSpec extends AnyFunSuite {
 
   test("cross-process: an ackBatch from another JVM slipping the fold's " +
        "residual window is deduplicated by the done-twin backstop") {
-    assume(canFork, "no forkable java binary")
+    assume(ForkedJvm.canFork, "no forkable java binary")
     val dir = TestSpark.tmpDir("xproc-ackfold-l")
     val t = LakehouseTable(spark, s"$dir/t", Seq("k"))
     val b1 = t.appendBatch(Seq((1, "a"), (2, "b")).toDF("k", "v"))

@@ -227,6 +227,25 @@ class LakehouseTableSpec extends AnyFunSuite {
     assert(t.read.count() == 1 && t.versions.nonEmpty)
   }
 
+  test("a swap retires the replaced tree: no tombstone stays, the " +
+       "background reclaim deletes it, vacuum sweeps an orphan") {
+    val dir = TestSpark.tmpDir("retire")
+    val t = LakehouseTable(spark, s"$dir/t", Seq("k"))
+    t.overwrite(Seq((1, "a")).toDF("k", "v"))
+    t.overwrite(Seq((2, "b")).toDF("k", "v"))
+    def siblings = new java.io.File(dir).list().toSeq
+    assert(!siblings.exists(_.contains(".tombstone-")), siblings)
+    val deadline = System.currentTimeMillis() + 60000
+    while (siblings.exists(_.contains(".retired-")) &&
+           System.currentTimeMillis() < deadline) Thread.sleep(20)
+    assert(!siblings.exists(_.contains(".retired-")), siblings)
+    // a retired tree whose owning process exited mid-delete: no
+    // reclaim of this process owns it, so vacuum sweeps it at once
+    assert(new java.io.File(dir, "t.retired-dead1").mkdirs())
+    assert(t.vacuum() == Seq("deleted:t.retired-dead1"))
+    assert(t.read.as[(Int, String)].collect().toSeq == Seq((2, "b")))
+  }
+
   test("vacuumVersions: time-based archive retention with the 168h guardrail") {
     val dir = TestSpark.tmpDir("lakevv")
     val t = LakehouseTable(spark, s"$dir/t", Seq("k"))

@@ -867,4 +867,68 @@ class MaterializedAggSpec extends AnyFunSuite {
         (1 to 4).map(k => (k, (1 to 50).filter(_ % 5 == k).sum.toLong)))
     } finally MaterializedAgg.clear()
   }
+
+  test("unpartitioned inputs whose data sits only in subdirs (a fold's " +
+       "compacted-*, appendBatch batch-*) register, serve and refresh") {
+    // a plain parquet read of such a root finds no file to infer a
+    // schema from (UNABLE_TO_INFER_SCHEMA) — the EtlMain failure once
+    // compaction folded silver_products into compacted-*/
+    val dir = TestSpark.tmpDir("mvsubdirs")
+    val factT = graft.tables.LakehouseTable(spark, s"$dir/fact",
+      Seq("id"), Seq("date"))
+    factT.overwrite(
+      Seq((1, "d1", 10, 100L), (2, "d1", 11, 200L), (3, "d2", 10, 50L))
+        .toDF("id", "date", "product_id", "amount"))
+    val dimT = graft.tables.LakehouseTable(spark, s"$dir/dim", Seq("pid"))
+    dimT.overwrite(Seq((10, "b1"), (11, "b2")).toDF("pid", "brand"))
+    dimT.compact(256L << 20)
+    assert(new java.io.File(s"$dir/dim").list()
+      .filterNot(n => n.startsWith("_") || n.startsWith("."))
+      .forall(_.startsWith("compacted-")), "the fold left root data files")
+    val sumT = graft.tables.LakehouseTable(spark, s"$dir/gold",
+      Seq("date"), Seq("date"))
+    sumT.overwrite(MaterializedAgg.buildJoin(factT.read, dimT.read,
+      "product_id", "pid", Seq("date", "brand"), Seq("amount")))
+    MaterializedAgg.attach(spark)
+    MaterializedAgg.registerJoin(spark, factT.path, dimT.path,
+      "product_id", "pid", sumT.path, Seq("date", "brand"), Seq("amount"))
+    try {
+      def query() = factT.read.join(dimT.read, col("product_id") === col("pid"))
+        .groupBy($"date", $"brand")
+        .agg(sum($"amount").as("rev"), count(lit(1)).as("n"))
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.orderBy("date", "brand").as[(String, String, Long, Long)]
+          .collect().toSeq
+      val q = query()
+      assert(scanPaths(q).nonEmpty && scanPaths(q).forall(_.contains("gold")),
+        scanPaths(q))
+      assert(rows(q) == Seq(("d1", "b1", 100L, 1L), ("d1", "b2", 200L, 1L),
+                            ("d2", "b1", 50L, 1L)))
+
+      // refreshJoin reads the compacted dim the same way
+      factT.upsert(Seq((4, "d1", 11, 5L)).toDF("id", "date", "product_id", "amount"))
+      MaterializedAgg.refreshJoin(factT, dimT.path, "product_id", "pid",
+        sumT, Seq("date", "brand"), Seq("amount"), Seq("d1"))
+      val q2 = query()
+      assert(scanPaths(q2).forall(_.contains("gold")), scanPaths(q2))
+      assert(rows(q2) == Seq(("d1", "b1", 100L, 1L), ("d1", "b2", 205L, 2L),
+                             ("d2", "b1", 50L, 1L)))
+
+      // plain register / deregister over a source held in batch dirs
+      val srcT = graft.tables.LakehouseTable(spark, s"$dir/src", Seq("k"))
+      srcT.appendBatch(Seq((1, 10L), (2, 20L)).toDF("k", "v"))
+      srcT.appendBatch(Seq((1, 5L)).toDF("k", "v"))
+      MaterializedAgg.build(srcT.read, Seq("k"), Seq("v"))
+        .write.parquet(s"$dir/src_gold")
+      MaterializedAgg.register(spark, srcT.path, s"$dir/src_gold",
+        Seq("k"), Seq("v"))
+      def byK() = srcT.read.groupBy($"k").agg(sum($"v").as("sv"))
+      assert(scanPaths(byK()).forall(_.contains("src_gold")), scanPaths(byK()))
+      assert(byK().orderBy("k").as[(Int, Long)].collect().toSeq ==
+        Seq((1, 15L), (2, 20L)))
+      MaterializedAgg.deregister(spark, srcT.path)
+      assert(scanPaths(byK()).forall(p => !p.contains("src_gold")),
+        scanPaths(byK()))
+    } finally MaterializedAgg.clear()
+  }
 }
