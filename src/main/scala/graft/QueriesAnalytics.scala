@@ -1239,9 +1239,9 @@ object QueriesAnalytics {
     // (count DESC, label ASC) selection. ─────────────────────────────
     "q_label_prop" -> q(
       c => {
-        // shared co-purchase graph + the factored LPA operator in
-        // fixed-iteration mode (earlyExit=false): the oracle unrolls
-        // exactly 5 CTE iterations, so the Spark side runs exactly 5
+        // shared co-purchase graph + the factored LPA operator: the
+        // oracle unrolls exactly 5 CTE iterations; LPA stops early only
+        // at a fixed point, whose output equals the unrolled one
         val edges = graft.operators.CoPurchase.undirectedEdges(
           graft.operators.CoPurchase.items(c.lineitem))
         graft.operators.LabelPropagation.run(edges, iters = 5)

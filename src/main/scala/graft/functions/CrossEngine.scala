@@ -23,12 +23,6 @@ object CrossEngine {
   def rnd4(c: Column): Column = roundHalfUp(c, 4)
   def rnd6(c: Column): Column = roundHalfUp(c, 6)
 
-  /** Oracle-side twin of [[roundHalfUp]] (ANSI SQL). */
-  def sqlRnd(expr: String, d: Int): String = {
-    val p = math.pow(10, d).toLong
-    s"floor(($expr) * $p + 0.5) / $p"
-  }
-
   /** Dates as ISO strings: a date comes back as `datetime.date`,
     * `Timestamp`, or `date32` depending on which engine/reader produced
     * it — strings hash identically everywhere. */

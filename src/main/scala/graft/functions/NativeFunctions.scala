@@ -808,9 +808,6 @@ object NativeFunctions {
     org.apache.spark.sql.graftbridge.ColumnBridge.column(
       ConstDoubleArray(spark.sparkContext.broadcast(values)))
 
-  def intersectCount(a: Column, b: Column): Column =
-    call_function("graft_intersect_count", a, b)
-
   /** Jaccard of two sorted-distinct arrays (string or long elements),
     * allocation-free single merge walk. */
   def sortedJaccard(a: Column, b: Column): Column =

@@ -5,51 +5,18 @@ import org.apache.spark.sql.functions._
 
 /** Synchronous label-propagation community detection (Raghavan et al.)
   * made deterministic: each node adopts the most frequent label among
-  * its neighbors, ties broken by SMALLEST label. The per-node argmax
-  * is window-free — `max(struct(count, −label))` in one aggregate — so
-  * no per-node sort ever happens; candidate (node, label) pairs per
-  * iteration are bounded by the edge count.
+  * its out-neighbors, ties broken by SMALLEST label; a node with no
+  * out-neighbor keeps its label. The per-node argmax is window-free —
+  * `max(struct(count, ~label))` in one aggregate — so no per-node sort
+  * ever happens; candidate (node, label) pairs per iteration are
+  * bounded by the edge count. The loop, layout and regime are
+  * [[Propagate]]'s: labels flow against the edge direction, so the
+  * edges are handed over reversed.
   *
-  * Iteration shape (PageRank's two-regime rule, applied to this
-  * operator's join): the edge table is materialized ONCE, laid out by
-  * the per-iteration AGGREGATION key `src` — and since a hash layout
-  * on `src` satisfies clustering for BOTH `groupBy(src, label)` and
-  * the downstream `groupBy(node = src)` argmax (partitioning
-  * expressions are a subset of each grouping key set), the whole
-  * frequency→adopt pipeline runs partition-local. Small V (≤
-  * `maxBroadcastNodes`): the label vector is broadcast into the
-  * neighbor join and the adopted labels broadcast back into the O(V)
-  * keep-old-label join, so an iteration exchanges NOTHING — the O(E)
-  * side never moves after its one up-front shuffle. Large V: edges are
-  * re-laid-out by the JOIN key `dst` instead (the superseded src-copy
-  * released — see [[Checkpoints.release]]), the O(V) label vector
-  * reshuffles to meet them, and one O(E) exchange on `src` feeds both
-  * aggregates; per iteration that is one O(E) exchange, not the two a
-  * naive join+groupBy plan pays. Label vectors are localCheckpointed
-  * per iteration and superseded ones released (the Lloyd rule:
-  * without truncation every iteration's consumer re-executes the
-  * whole lineage; without release a long run pins O(iters · V)
-  * storage). Edge-checkpoint BLOCK SIZE is bounded inside the same
-  * [[Checkpoints.relayout]] pass that captures the hash layout: a
-  * task reading a cached block read-locks it, so fat blocks with
-  * partitions == cores pin the whole O(E) checkpoint at once (the
-  * 2 GB sf1 rehearsal's AGGREGATE_OUT_OF_MEMORY); sizing the
-  * re-layout from the measured footprint restores the partitions ≫
-  * concurrent-tasks shape a real cluster always has, folded into the
-  * exchange every run already pays for layout capture.
-  *
-  * Convergence: synchronous deterministic LPA reaches a FIXED POINT —
-  * once no label changes, every later iteration recomputes the same
-  * assignment — so `earlyExit` stops the loop the first time a
-  * zero-change iteration is observed, with output IDENTICAL to running
-  * the remaining iterations. The check is one O(V) join over two
-  * checkpointed label vectors per iteration (both descend from the
-  * same layout, so it is exchange-free too). At 100 TB this is the
-  * difference between paying full graph passes a converged run no
-  * longer needs and an unconverged run silently under-iterating:
-  * callers pick `maxIters` generously and let the fixed point cut it.
-  * Fixed-iteration mode (`earlyExit = false`) is kept for oracle
-  * parity with unrolled-CTE replays.
+  * Convergence: a deterministic synchronous step applied to an
+  * unchanged label vector repeats it forever, so the loop stops at the
+  * first iteration that changes no label — the output is identical to
+  * running the remaining iterations.
   */
 object LabelPropagation {
 
@@ -59,133 +26,29 @@ object LabelPropagation {
     *              neighbor vote (weighted LPA); pass a distinct edge
     *              list for the unweighted form.
     * @return one row per node: (node, label). */
-  def run(edges: DataFrame, iters: Int,
-          earlyExit: Boolean = false,
-          maxBroadcastNodes: Long = 500000): DataFrame =
-    runWithStats(edges, iters, earlyExit, maxBroadcastNodes)._1
+  def run(edges: DataFrame, iters: Int): DataFrame =
+    runWithStats(edges, iters)._1
 
   /** [[run]] plus the number of iterations actually executed. */
-  def runWithStats(edges: DataFrame, maxIters: Int,
-                   earlyExit: Boolean,
-                   maxBroadcastNodes: Long = 500000): (DataFrame, Int) = {
-    require(maxIters >= 1, "maxIters must be >= 1")
-    // materialize the edge table before the loop: a caller-supplied
-    // DERIVED edge list (join/aggregate lineage) would otherwise
-    // re-execute its full construction once per iteration. Laid out by
-    // `src` up front — exactly what the (common) broadcast regime
-    // wants, so that regime needs no second materialization pass.
-    // Two-phase materialization (PageRank's shape): the caller's
-    // derivation runs under AQE into a plain checkpoint; relayout then
-    // re-keys it by src in a pure-exchange pass with AQE scoped OFF so
-    // the hash layout is CAPTURED into the LogicalRDD (plain
-    // localCheckpoint records Unknown partitioning under AQE and every
-    // iteration re-exchanges O(E) for the frequency aggregate — the
-    // shuffle this layout exists to eliminate; see
-    // Checkpoints.checkpointKeepingLayout). relayout also bounds block
-    // sizes and releases the derivation copy.
-    val edgesM = Checkpoints.relayout(
-      edges.select(col("src"), col("dst")).localCheckpoint(),
-      Seq(col("src")))
-    // node set = src ∪ dst (PageRank's convention): seeding from src
-    // alone drops sink-only nodes, and an update step that only kept
-    // nodes WITH in-neighbors would shrink the vector every iteration
-    // on a directed input — nodes silently vanishing from the output
-    // despite the one-row-per-node contract. (On undirected inputs —
-    // both directions present — the two formulations are identical.)
-    // explode, not a two-branch union: one pass over the cached O(E)
-    // checkpoint instead of one per branch (PageRank's nodeTab note).
-    // Two-phase like the edges: the distinct materializes under AQE
-    // (coalesced exchange), relayout then captures a
-    // bytes-proportional node-hash layout — every per-iteration
-    // broadcast build and checkpoint of the label vector inherits
-    // that narrow width instead of 32 near-empty blocks (PageRank's
-    // nodeTab note, same measurement)
-    var labels = Checkpoints.relayout(
-      edgesM
-        .select(explode(array(col("src"), col("dst"))).as("node")).distinct()
-        .withColumn("label", col("node"))
-        .localCheckpoint(),
-      Seq(col("node")))
-    // regime choice on an exact driver-side statistic, made ONCE
-    // (checkpointed vectors are LogicalRDDs — AQE never sees their
-    // size, so compile-time stats would force shuffles even for a
-    // tiny label table)
-    val n = labels.count()
-    val broadcastLabels = n <= maxBroadcastNodes
-    val edgesPre =
-      if (broadcastLabels) edgesM
-      else
-        // block-bounded dst layout; relayout releases the superseded
-        // src copy AFTER the new checkpoint materializes, or the run
-        // pins two O(E) edge checkpoints for its whole duration
-        Checkpoints.relayout(edgesM, Seq(col("dst")))
-    // the SEED vector is a checkpoint too — seeding prevCheckpoint
-    // with it means iteration 1's release frees it like any other
-    // superseded vector (it was pinned for the whole run before;
-    // iteration 1's `next` and the convergence check both finish
-    // reading it ahead of the end-of-loop release)
-    var prevCheckpoint: Option[org.apache.spark.sql.DataFrame] =
-      Some(labels)
-    var it = 0
-    var converged = false
-    while (it < maxIters && !converged) {
-      val lblAtDst = labels.select(col("node").as("dst"), col("label"))
-      val joined = edgesPre.join(
-        if (broadcastLabels) broadcast(lblAtDst) else lblAtDst, Seq("dst"))
-      // large V: ONE explicit exchange on the aggregation key; both
-      // groupBys below then run partition-local on top of it. Small V:
-      // the broadcast join preserved the src layout, nothing moves.
-      val freqIn = if (broadcastLabels) joined
-                   else joined.repartition(col("src"))
-      val freq = freqIn
-        .groupBy(col("src").as("node"), col("label"))
+  def runWithStats(edges: DataFrame, maxIters: Int): (DataFrame, Int) =
+    // node set = src ∪ dst: seeding from one side alone drops nodes on
+    // a directed input, despite the one-row-per-node contract
+    Propagate.run(edges.select(col("dst").as("src"), col("src").as("dst")),
+        maxIters, _.select(explode(array(col("src"), col("dst"))).as("node"))
+          .distinct().withColumn("label", col("node")))(_.nodes) { (g, labels) =>
+      // each node's own label joins the vote with count 0: it wins only
+      // when no neighbor votes. Smallest-label tie-break WITHOUT
+      // negation: -label overflows at Long.MinValue; ~x = -x-1 reverses
+      // the order with no overflow.
+      val pick = bitwise_not(col("m.nl"))
+      g.gather(labels)
+        .groupBy(col("dst").as("node"), col("label"))
         .agg(count(lit(1)).as("cnt"))
-      // smallest-label tie-break WITHOUT negation: -label overflows at
-      // Long.MinValue (wraps to itself under ANSI-off, throws under
-      // ANSI-on — the hazard TopKPairs.ordering documents). Flip the
-      // BITS instead: x -> ~x = -x-1 is a total order reversal with no
-      // overflow, and ~~x round-trips exactly.
-      val adopted = freq.groupBy("node")
-        .agg(max(struct(col("cnt"),
-                        bitwise_not(col("label")).as("nl"))).as("m"))
-        .select(col("node"), bitwise_not(col("m.nl")).as("adopted"))
-      // left join: a node with no in-neighbors keeps its current
-      // label. Broadcasting the O(V) adopted table keeps the label
-      // vector's own layout stable across iterations (so this join AND
-      // the early-exit check below stay exchange-free); large V pays
-      // the O(V) shuffle instead. Then eager localCheckpoint, then
-      // RELEASE the superseded vector (see Checkpoints.release: plain
-      // unpersist can't free checkpoint blocks, and leaking one O(V)
-      // vector per iteration starved execution memory in the 2 GB heap
-      // rehearsal). Materialization happens before the release — this
-      // plan reads the previous vector, whose lineage is already
-      // truncated.
-      val next = labels.select(col("node"), col("label").as("prev0"))
-        .join(if (broadcastLabels) broadcast(adopted) else adopted,
-              Seq("node"), "left_outer")
-        .select(col("node"),
-                coalesce(col("adopted"), col("prev0")).as("label"))
-        .transform(Checkpoints.checkpointKeepingLayout)
-      it += 1
-      if (earlyExit && it < maxIters) {
-        // fixed point reached: label vector unchanged => every later
-        // iteration is a no-op; isEmpty short-circuits at the first
-        // changed row
-        converged = next
-          .join(labels.withColumnRenamed("label", "prev"), Seq("node"))
-          .filter(col("label") =!= col("prev"))
-          .isEmpty
-      }
-      prevCheckpoint.foreach(Checkpoints.release)
-      prevCheckpoint = Some(next)
-      labels = next
+        .unionByName(labels.withColumn("cnt", lit(0L)))
+        .groupBy("node")
+        .agg(max(struct(col("cnt"), bitwise_not(col("label")).as("nl"))).as("m"),
+             max(when(col("cnt") === 0, col("label"))).as("own"))
+        .select(col("node"), pick.as("label"),
+                (!(pick <=> col("own"))).as(Propagate.Moved))
     }
-    // the final vector stays persisted (it is the result, a
-    // self-contained checkpoint); the O(E) edge checkpoint is
-    // released HERE, not left to GC — on a memory-tight executor a
-    // lingering edge table starves the NEXT query's aggregates (the
-    // locked-storage class the 2 GB rehearsal surfaced)
-    Checkpoints.release(edgesPre)
-    (labels, it)
-  }
 }

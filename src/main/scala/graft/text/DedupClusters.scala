@@ -1,6 +1,6 @@
 package graft.text
 
-import graft.operators.Checkpoints
+import graft.operators.Propagate
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -9,36 +9,17 @@ import org.apache.spark.sql.functions._
   * generation in a real training-data dedup pipeline: each cluster
   * keeps one representative).
   *
-  * Algorithm: synchronous min-label propagation, BATCHED — K gather
-  * rounds (label(v) ← min over v's in-neighbors ∪ v of their labels)
-  * are composed into ONE lazy Catalyst plan per materialization, then
-  * a single fixpoint check (every edge's endpoints share a label)
-  * decides whether another batch is needed. Each round references the
-  * previous labels exactly once (no self-join), so the batched plan
-  * grows LINEARLY in K and the whole batch runs as one job; near-dup
-  * graphs are dense with tiny diameter, so the first batch almost
-  * always converges and a full run is pairs-materialize + one batch
-  * job + one check job — versus one-job-per-Pregel-round shapes whose
-  * per-query job count dominates at bench scale (guide §1.2). The
-  * result (min vertex id per component) is the unique fixpoint —
-  * deterministic regardless of execution order, and the explicit
-  * fixpoint check makes the batching exact on ANY diameter (a
-  * 30-node chain just takes more batches).
-  *
-  * Scale shape: the edge checkpoint is laid out ONCE by the gather
-  * join key `src` (PageRank's two-phase materialization); each round
-  * then reshuffles only the O(V) label vector to the join plus the
-  * unavoidable O(E) gather aggregation — the same per-iteration
-  * exchange budget as the PageRank large-V regime.
+  * Algorithm: synchronous min-label propagation on [[Propagate]]. Each
+  * pair is two directed edges (no self-loops); a round sets
+  * label(v) ← least(label(v), min over v's neighbors' labels) — the
+  * own label joins the neighbors' in one min aggregate — and the loop
+  * stops at the first round that lowers no label. The result (min
+  * vertex id per component) is the unique fixed point — deterministic
+  * regardless of execution order — reached after as many rounds as the
+  * min node's eccentricity, plus one that changes nothing; the first
+  * round rides the node table. A 30-node chain takes 30 rounds.
   */
 object DedupClusters {
-  /** Gather rounds composed per lazy plan before each materialization
-    * + fixpoint check. Near-dup components converge in 1-3 rounds
-    * (min-propagation needs the min node's eccentricity); 4 keeps the
-    * common case one-batch without paying unbounded passes on the
-    * rare deep-chain graph. */
-  private val batchRounds = 4
-
   /** pairs: (id_a, id_b) undirected near-dup edges. Returns
     * (id, cluster_id) for every node that appears in a pair, where
     * cluster_id = min node id of its component. */
@@ -48,7 +29,8 @@ object DedupClusters {
     // type was the problem; ids past 2^53 would later mis-compare
     // through a double cast in survivorsBy. Map string ids to longs
     // (xxhash64, a dictionary) before clustering.
-    Seq("id_a", "id_b").foreach { c =>
+    val ids = Seq("id_a", "id_b")
+    ids.foreach { c =>
       val dt = pairs.schema(c).dataType
       require(Seq(org.apache.spark.sql.types.LongType,
                   org.apache.spark.sql.types.IntegerType,
@@ -58,58 +40,36 @@ object DedupClusters {
     }
     val a = col("id_a").cast("long")
     val b = col("id_b").cast("long")
-    // ONE pass over the (expensive, derived) pair pipeline emits the
-    // gather edge list: both directions PLUS a self-loop per endpoint
-    // — the self-loop is what lets a round be a plain join+min with no
-    // "keep your own label" second branch, and min-aggregation
-    // tolerates the duplicate self-loops, so no distinct pass either.
-    // Two-phase materialization (PageRank's shape): derivation under
-    // AQE into a plain checkpoint, then relayout captures the src hash
-    // layout so every round's gather join leaves the O(E) side put.
     val edges = pairs.select(explode(array(
-        struct(a.as("src"), b.as("dst")),
-        struct(b.as("src"), a.as("dst")),
-        struct(a.as("src"), a.as("dst")),
-        struct(b.as("src"), b.as("dst")))).as("__e"))
-      .select(col("__e.src").as("src"), col("__e.dst").as("dst"))
-    val edgesM = Checkpoints.relayout(edges.localCheckpoint(),
-                                      Seq(col("src")))
-
-    // one gather round; references `lbl` exactly once → linear plans
-    def round(lbl: DataFrame): DataFrame =
-      edgesM.join(lbl.withColumnRenamed("id", "src"), "src")
-        .groupBy(col("dst").as("id"))
-        .agg(min("cluster_id").as("cluster_id"))
-    // round 1 fused: with label(u) = u the gather is a plain groupBy
-    val round1 = edgesM.groupBy(col("dst").as("id"))
-      .agg(min("src").as("cluster_id"))
-    // fixpoint ⟺ labels constant per component ⟺ per-edge label
-    // equality (self-loops compare trivially equal); one tiny job
-    def atFixpoint(lbl: DataFrame): Boolean =
-      edgesM
-        .join(lbl.select(col("id").as("src"), col("cluster_id").as("la")),
-              Seq("src"))
-        .join(lbl.select(col("id").as("dst"), col("cluster_id").as("lb")),
-              Seq("dst"))
-        .filter(col("la") =!= col("lb"))
-        .isEmpty
-
-    var labels = Checkpoints.checkpointKeepingLayout(
-      (2 to batchRounds).foldLeft(round1)((l, _) => round(l)))
-    while (!atFixpoint(labels)) {
-      val next = Checkpoints.checkpointKeepingLayout(
-        (1 to batchRounds).foldLeft(labels)((l, _) => round(l)))
-      Checkpoints.release(labels)
-      labels = next
+        struct(a.as("src"), b.as("dst")), struct(b.as("src"), a.as("dst"))))
+      .as("__e")).select("__e.src", "__e.dst")
+    // the node table already holds round 1: with label(u) = u the
+    // gather is a plain groupBy over the edges
+    val (labels, _) = Propagate.run(edges, Int.MaxValue,
+        _.groupBy("dst").agg(min("src").as("m")).select(col("dst").as("node"),
+          least(col("dst"), col("m")).as("label")),
+        Seq(count(col("node")))) { g =>
+      // a NULL id shows in the node count (non-NULL count < |V|); only
+      // then is the pair frame re-read to name the column
+      if (g.stats.getLong(1) < g.n) ids.foreach(c =>
+        require(pairs.filter(col(c).isNull).isEmpty,
+                s"DedupClusters: NULL pair id in '$c'"))
+      g.nodes
+    } { (g, labels) =>
+      g.gather(labels).select(col("dst").as("node"), col("label"),
+                              lit(false).as("own"))
+        .unionByName(labels.withColumn("own", lit(true)))
+        .groupBy("node")
+        .agg(min("label").as("label"),
+             min(when(col("own"), col("label"))).as("was"))
+        .select(col("node"), col("label"),
+                (col("label") < col("was")).as(Propagate.Moved))
     }
-    // the coalesces are identities (labels are never null) that mark
-    // both columns non-nullable — the schema the downstream parquet
-    // dumps have always carried for this operator
-    val out = labels.select(
-      coalesce(col("id"), lit(0L)).as("id"),
-      coalesce(col("cluster_id"), lit(0L)).as("cluster_id"))
-    Checkpoints.release(edgesM)
-    out
+    // the coalesces are identities (ids are never NULL) that mark both
+    // columns non-nullable — the schema the downstream parquet dumps
+    // have always carried for this operator
+    labels.select(coalesce(col("node"), lit(0L)).as("id"),
+                  coalesce(col("label"), lit(0L)).as("cluster_id"))
   }
 
   /** Full dedup: near-dup pairs → components → survivors = one

@@ -129,8 +129,10 @@ class AnalyticsSpec extends AnyFunSuite {
     // directed ring: perfectly symmetric, so ranks sit at the uniform
     // fixed point from the start — deltas are ulp-scale immediately
     val ring = (0L until 8L).map(i => (i, (i + 1) % 8)).toDF("src", "dst")
+    // tolScaled is a threshold on xV-scaled ranks: 8e-12 on 8 nodes
+    // stops once no raw rank moves by more than 1e-12
     val (fast, itFast) = PageRank.runWithStats(ring, maxIters = 200,
-      tol = Some(1e-12))
+      tolScaled = Some(8e-12))
     assert(itFast < 200, s"pre-converged ring should exit early, ran $itFast")
     val got = fast.as[(Long, Double)].collect().toMap
     assert(got.size == 8 && got.values.forall(v => math.abs(v - 0.125) < 1e-9),
@@ -141,16 +143,9 @@ class AnalyticsSpec extends AnyFunSuite {
     assert(got.keySet == fixed.keySet &&
       got.forall { case (k, v) =>
         math.round(v * 8 * 1e6) == math.round(fixed(k) * 8 * 1e6) })
-    // tol=None: exactly maxIters, bit-parity mode for oracle replays
+    // no tolerance: exactly maxIters, bit-parity mode for oracle replays
     val (_, itFixed) = PageRank.runWithStats(ring, maxIters = 7)
     assert(itFixed == 7)
-    // tolScaled: the graph-size-free form (threshold on xV-scaled
-    // ranks / internally-computed |V|) — 8 nodes makes 8e-12 the same
-    // effective threshold as tol=1e-12 above
-    val (_, itScaled) = PageRank.runWithStats(ring, maxIters = 200,
-      tolScaled = Some(8e-12))
-    assert(itScaled == itFast,
-      s"tolScaled/|V| must match the equivalent absolute tol: $itScaled vs $itFast")
   }
 
   test("label propagation: fixed point exits early with output identical to the full run") {
@@ -160,12 +155,16 @@ class AnalyticsSpec extends AnyFunSuite {
     val tri = Seq((1L, 2L), (2L, 3L), (1L, 3L), (10L, 11L), (11L, 12L), (10L, 12L))
     val edges = tri.flatMap { case (a, b) => Seq((a, b), (b, a)) }
       .toDF("src", "dst")
-    val (early, itEarly) = LabelPropagation.runWithStats(edges, maxIters = 50,
-      earlyExit = true)
+    val (early, itEarly) = LabelPropagation.runWithStats(edges, maxIters = 50)
     assert(itEarly < 50, s"fixed point must cut the loop, ran $itEarly")
     val full = LabelPropagation.run(edges, iters = 50)
     assert(early.orderBy("node").as[(Long, Long)].collect().toSeq ==
            full.orderBy("node").as[(Long, Long)].collect().toSeq)
+    // the round that detected the fixed point changed nothing: stopping
+    // one round earlier gives the same labels
+    val before = LabelPropagation.run(edges, iters = itEarly - 1)
+    assert(early.orderBy("node").as[(Long, Long)].collect().toSeq ==
+           before.orderBy("node").as[(Long, Long)].collect().toSeq)
     // each triangle collapses to one community
     val labs = early.as[(Long, Long)].collect().toMap
     assert(Set(labs(1L), labs(2L), labs(3L)).size == 1)
@@ -213,24 +212,36 @@ class AnalyticsSpec extends AnyFunSuite {
   }
 
   test("pagerank + label propagation: large-V regime ≡ broadcast regime") {
-    import graft.operators.{LabelPropagation, PageRank}
-    // maxBroadcastNodes = 0 forces the pre-partitioned (large-V) plan
+    import graft.operators.{LabelPropagation, PageRank, Propagate}
+    import graft.text.DedupClusters
+    // a broadcast limit of 0 forces the pre-partitioned (large-V) plan
     // on the same graph the broadcast plan serves by default — neither
     // regime's result may depend on the join strategy. Nothing else in
     // the suite (or the sf fixtures, V ≤ 500k) exercises the large-V
     // path, so this is its only correctness pin.
+    def largeV[T](body: => T): T = Propagate.withBroadcastLimit(0L)(body)
     val quads = Seq((1L, 2L), (2L, 3L), (3L, 4L), (1L, 4L),
                     (10L, 11L), (11L, 12L), (2L, 11L))
     val edges = quads.flatMap { case (a, b) => Seq((a, b), (b, a)) }
       .toDF("src", "dst")
-    val (lb, _) = LabelPropagation.runWithStats(edges, 6, earlyExit = false)
-    val (ll, _) = LabelPropagation.runWithStats(edges, 6, earlyExit = false,
-      maxBroadcastNodes = 0)
+    val (lb, _) = LabelPropagation.runWithStats(edges, 6)
+    val (ll, _) = largeV(LabelPropagation.runWithStats(edges, 6))
     assert(lb.orderBy("node").as[(Long, Long)].collect().toSeq ==
            ll.orderBy("node").as[(Long, Long)].collect().toSeq)
+    // connected components: chain-plus-islands and a 30-node chain
+    // (29 kernel rounds, each one read through the witness)
+    val islands = Seq((1L, 2L), (2L, 3L), (5L, 6L)).toDF("id_a", "id_b")
+    val chain = (1L until 30L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    for (pairs <- Seq(islands, chain)) {
+      val cb = DedupClusters.connectedComponents(pairs)
+        .orderBy("id").as[(Long, Long)].collect().toSeq
+      val cl = largeV(DedupClusters.connectedComponents(pairs))
+        .orderBy("id").as[(Long, Long)].collect().toSeq
+      assert(cb == cl)
+    }
     val rb = PageRank.run(edges, iters = 5).as[(Long, Double)]
       .collect().toMap
-    val rl = PageRank.run(edges, iters = 5, maxBroadcastNodes = 0)
+    val rl = largeV(PageRank.run(edges, iters = 5))
       .as[(Long, Double)].collect().toMap
     assert(rb.keySet == rl.keySet)
     // same IEEE formula either way; only distributed sum order may
@@ -239,36 +250,27 @@ class AnalyticsSpec extends AnyFunSuite {
       s"node $k: broadcast=$v largeV=${rl(k)}") }
   }
 
-  test("boundBlocks: fat checkpoint blocks re-layout, bounded ones pass through") {
+  test("relayout: keyed, bytes-proportional width, superseded checkpoint released") {
     import graft.operators.Checkpoints
     val df = spark.range(0, 20000)
       .select((col("id") % 97).as("k"), col("id").as("v"))
       .repartition(2, col("k")).localCheckpoint()
-    // generous target: stat check must return the SAME frame, no job
-    assert(Checkpoints.boundBlocks(df, Seq(col("k")), 1L << 30) eq df)
-    val bytes = Checkpoints.cachedBytes(df)
-    assert(bytes > 0L, "block manager must report the checkpoint")
-    // tiny target: must widen to ~bytes/target partitions, keep every
-    // row, and release the fat copy's blocks
-    val wide = Checkpoints.boundBlocks(df, Seq(col("k")), 16L << 10)
-    assert(wide.rdd.getNumPartitions > 2, wide.rdd.getNumPartitions)
-    assert(wide.groupBy("k").count().count() == 97)
-    assert(wide.count() == 20000)
-    assert(Checkpoints.cachedBytes(df) == 0L,
-      "superseded fat checkpoint must be released")
-    // relayout: keyed + sorted second layout, width PROPORTIONAL to
+    assert(Checkpoints.cachedBytes(df) > 0L,
+      "block manager must report the checkpoint")
+    // relayout: keyed + sorted layout, width PROPORTIONAL to
     // the measured bytes (a tiny checkpoint stays narrow instead of
     // being widened to session parallelism — and, the other way, a
     // data-rich one is no longer capped at the derivation's
     // AQE-coalesced width; see the relayout scaladoc), original
     // released only after materialization
-    val re = Checkpoints.relayout(wide, Seq(col("k")), Seq("v"))
+    val re = Checkpoints.relayout(df, Seq(col("k")), Seq("v"))
     assert(re.rdd.getNumPartitions >= 1 &&
       re.rdd.getNumPartitions <=
         spark.sessionState.conf.numShufflePartitions,
       s"tiny checkpoint widened to ${re.rdd.getNumPartitions}")
     assert(re.count() == 20000)
-    assert(Checkpoints.cachedBytes(wide) == 0L,
+    assert(re.groupBy("k").count().count() == 97)
+    assert(Checkpoints.cachedBytes(df) == 0L,
       "relayout must release the superseded layout")
     assert(Checkpoints.cachedBytes(re) > 0L)
     // bytes-rich relative to the target: full session parallelism is

@@ -28,6 +28,19 @@ class ClustersAndBucketingSpec extends AnyFunSuite {
     assert(comps.forall(_._2 == 1L), comps.mkString(","))
   }
 
+  test("connected components reject a NULL pair id, naming the column") {
+    // a NULL id drops out of the label joins and would come back as a
+    // fabricated id = 0 row: it must fail loud, naming the column
+    val ok = (Option(1L), Option(2L))
+    for ((bad, c) <- Seq(((None, Some(3L)), "id_a"), ((Some(3L), None), "id_b"))) {
+      val pairs = Seq(ok, bad).toDF("id_a", "id_b")
+      val ex = intercept[IllegalArgumentException] {
+        DedupClusters.connectedComponents(pairs).collect()
+      }
+      assert(ex.getMessage.contains(s"'$c'"), ex.getMessage)
+    }
+  }
+
   test("co-bucketed tables join without a shuffle exchange") {
     val a = (1 to 10000).map(i => (i.toLong, s"a$i")).toDF("k", "va")
     val b = (1 to 10000).map(i => (i.toLong, s"b$i")).toDF("k", "vb")

@@ -1,5 +1,6 @@
 package graft
 
+import graft.operators.Propagate
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -9,11 +10,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * Every driver fixture graph has V ≤ 500k, so PageRank's large-V path
   * (rank vector too big to broadcast: edges pre-partitioned by the
   * join key, only the O(V) rank side reshuffles per iteration —
-  * `PageRank.scala` regime comment) used to run only under the forced
-  * `maxBroadcastNodes = 0` equivalence spec. This spec measures it on
+  * `Propagate.scala` regime paragraph) used to run only under the forced
+  * broadcast-limit-0 equivalence spec. This spec measures it on
   * `fixtures/graph/edges_{500k,2m}.parquet` (tools/gen_graph.py:
   * V = 0.5M/2M, E ≈ 5M/20M, 10 edges/node, hash-deterministic), on
-  * both sides of the 500k default crossover:
+  * both sides of the 500k crossover (forced through
+  * `Propagate.withBroadcastLimit`):
   *
   *  1. the two regimes agree numerically at V = 2M (the correctness
   *     pin, now on data the default actually routes to large-V);
@@ -50,8 +52,8 @@ class GraphRegimeSpec extends AnyFunSuite {
     * accumulate pinned O(V) blocks. */
   private def runSecs(e: DataFrame, iters: Int, maxB: Long): Double = {
     val t0 = System.nanoTime()
-    val (r, _) = graft.operators.PageRank.runWithStats(
-      e, iters, maxBroadcastNodes = maxB)
+    val (r, _) = Propagate.withBroadcastLimit(maxB)(
+      graft.operators.PageRank.runWithStats(e, iters))
     val t = (System.nanoTime() - t0) / 1e9
     graft.operators.Checkpoints.release(r)
     t
@@ -84,8 +86,8 @@ class GraphRegimeSpec extends AnyFunSuite {
     // broadcast twin is forced. 3 iterations keep the cross-regime
     // sum-order drift far below the tolerance.
     val large = graft.operators.PageRank.run(e, iters = 3)
-    val bcast = graft.operators.PageRank.run(
-      e, iters = 3, maxBroadcastNodes = Long.MaxValue)
+    val bcast = Propagate.withBroadcastLimit(Long.MaxValue)(
+      graft.operators.PageRank.run(e, iters = 3))
     val d = large.withColumnRenamed("r", "rl")
       .join(bcast.withColumnRenamed("r", "rb"), Seq("node"))
       .agg(max(abs(col("rl") - col("rb"))).as("d"),
@@ -108,13 +110,12 @@ class GraphRegimeSpec extends AnyFunSuite {
     // LPA ⇒ identical label assignments regardless of regime.
     val t0 = System.nanoTime()
     val (large, itL) = graft.operators.LabelPropagation.runWithStats(
-      e, maxIters = 3, earlyExit = false)
+      e, maxIters = 3)
     val largeN = large.count()
     val tLarge = (System.nanoTime() - t0) / 1e9
     val t1 = System.nanoTime()
-    val (bcast, itB) = graft.operators.LabelPropagation.runWithStats(
-      e, maxIters = 3, earlyExit = false,
-      maxBroadcastNodes = Long.MaxValue)
+    val (bcast, itB) = Propagate.withBroadcastLimit(Long.MaxValue)(
+      graft.operators.LabelPropagation.runWithStats(e, maxIters = 3))
     val tB = (System.nanoTime() - t1) / 1e9
     assert(itL == 3 && itB == 3)
     assert(largeN == 2000000L, s"node count $largeN")

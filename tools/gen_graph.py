@@ -7,7 +7,8 @@ a 100 TB link graph actually runs (rank vector too big to broadcast;
 edges pre-partitioned by the join key, O(V) rank side reshuffles per
 iteration) — was only ever exercised by the forced-equivalence spec,
 never perf-measured on data that genuinely needs it. These fixtures put
-real data on both sides of the maxBroadcastNodes=500k default:
+real data on both sides of the 500k-node broadcast crossover that
+graft.operators.Propagate gates on:
 
   fixtures/graph/edges_500k.parquet   V = 500_000,  E ~ 5M  (at the edge)
   fixtures/graph/edges_2m.parquet     V = 2_000_000, E ~ 20M (past it)
